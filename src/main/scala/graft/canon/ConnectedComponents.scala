@@ -173,7 +173,9 @@ object ConnectedComponents {
     * root the component's running minimum, so no second minimize pass;
     * path halving keeps find() near-constant. Memory is O(distinct nodes
     * in the partition) — bounded by the advisory partition size that
-    * admitted the fast path. */
+    * admitted the fast path. An edge with a null endpoint is skipped, the
+    * way [[components]]' `src =!= dst` filter drops it before the loop: a
+    * null is no node. */
   private[graft] def unionFindComponents(
       edges: Iterator[(String, String)]): Iterator[(String, String)] = {
     val parent = new java.util.HashMap[String, String]()
@@ -200,7 +202,7 @@ object ConnectedComponents {
       }
       x.length < y.length
     }
-    edges.foreach { case (s, d) =>
+    edges.filter { case (s, d) => s != null && d != null }.foreach { case (s, d) =>
       if (!parent.containsKey(s)) parent.put(s, s)
       if (!parent.containsKey(d)) parent.put(d, d)
       val rs = find(s)

@@ -24,56 +24,63 @@ import graft.model.NS
 object RecordLinkage {
 
   /** Feature extraction: triples → one row per PrisonerRecord with the
-    * linker.py:104-158 fields. Pruned persons are skipped (P5). */
+    * linker.py:104-158 fields. Pruned persons are skipped (P5).
+    *
+    * One `groupBy(subj)` with conditional aggregates over the rows of the
+    * feature predicates; rank levels join (broadcast gazetteer) onto the
+    * rank rows before it. A person without a value of a multi-valued
+    * field keeps a null field, not an empty array. */
   def prisonerFeatures(triples: DataFrame, ranksGaz: DataFrame): DataFrame = {
-    val spark = triples.sparkSession
-    import spark.implicits._
+    val pred = col("pred")
+    val obj = col("objValue")
+    val isRecord = pred === NS.RDF_TYPE && obj === (NS.SCHEMA_WARSA + "PrisonerRecord")
+    val Removed = NS.SCHEMA_POW + "personal_information_removed"
+    val Given = NS.SCHEMA_WARSA + "given_names"
+    val Family = NS.SCHEMA_WARSA + "family_name"
+    val Rank = NS.SCHEMA_POW + "rank"
+    val BirthPlace = NS.SCHEMA_WARSA + "municipality_of_birth"
+    val DeathPlace = NS.SCHEMA_POW + "municipality_of_death"
+    val Unit = NS.SCHEMA_POW + "unit"
+    val Occupation = NS.BIOC + "has_occupation"
+    val Birth = NS.SCHEMA_WARSA + "date_of_birth"
+    val Death = NS.SCHEMA_POW + "date_of_death"
 
-    val persons = triples
-      .filter($"pred" === NS.RDF_TYPE && $"objValue" === (NS.SCHEMA_WARSA + "PrisonerRecord"))
-      .select($"subj".as("person_uri"), $"docId")
-    val pruned = triples
-      .filter($"pred" === (NS.SCHEMA_POW + "personal_information_removed"))
-      .select($"subj".as("person_uri")).distinct()
-    val live = persons.join(pruned, Seq("person_uri"), "left_anti")
-
-    def objsOf(pred: String, name: String): DataFrame =
-      triples.filter($"pred" === pred)
-        .groupBy($"subj".as("person_uri"))
-        .agg(sort_array(collect_set($"objValue")).as(name))
-
-    def firstOf(pred: String, name: String): DataFrame =
-      triples.filter($"pred" === pred)
-        .groupBy($"subj".as("person_uri")).agg(min($"objValue").as(name))
-
+    def first(p: String) = min(when(pred === p, obj))
+    def objs(p: String) = {
+      val set = collect_set(when(pred === p, obj))
+      when(size(set) > 0, sort_array(set))
+    }
     // date fields: only typed xsd:date values carry into min/max folding
     // (get_date_value analogue — strings fold out as nulls)
-    def dates(pred: String, minName: String, maxName: String): DataFrame =
-      triples.filter($"pred" === pred && $"objDatatype" === NS.XSD_DATE)
-        .groupBy($"subj".as("person_uri"))
-        .agg(min($"objValue").as(minName), max($"objValue").as(maxName))
+    def date(p: String) = when(pred === p && col("objDatatype") === NS.XSD_DATE, obj)
 
-    val rankLevels = triples.filter($"pred" === (NS.SCHEMA_POW + "rank"))
-      .select($"subj".as("person_uri"), $"objValue".as("rank_uri"))
-      .join(broadcast(ranksGaz.select($"uri".as("rank_uri"), $"level")), Seq("rank_uri"))
-      .groupBy($"person_uri").agg(max($"level").as("rank_level"))
-
-    live
-      .join(firstOf(NS.SCHEMA_WARSA + "given_names", "given"), Seq("person_uri"), "left")
-      .join(firstOf(NS.SCHEMA_WARSA + "family_name", "family_raw"), Seq("person_uri"), "left")
-      .join(objsOf(NS.SCHEMA_POW + "rank", "rank"), Seq("person_uri"), "left")
-      .join(rankLevels, Seq("person_uri"), "left")
-      .join(objsOf(NS.SCHEMA_WARSA + "municipality_of_birth", "birth_place"), Seq("person_uri"), "left")
-      .join(objsOf(NS.SCHEMA_POW + "municipality_of_death", "death_place"), Seq("person_uri"), "left")
-      .join(objsOf(NS.SCHEMA_POW + "unit", "unit"), Seq("person_uri"), "left")
-      .join(objsOf(NS.BIOC + "has_occupation", "occupation"), Seq("person_uri"), "left")
-      .join(dates(NS.SCHEMA_WARSA + "date_of_birth", "birth_begin", "birth_end"), Seq("person_uri"), "left")
-      .join(dates(NS.SCHEMA_POW + "date_of_death", "death_begin", "death_end"), Seq("person_uri"), "left")
-      // previous-name unification: "Heino (ent. Kalmari)" -> "Heino Kalmari"
-      // (linker.py:143)
-      .withColumn("family", regexp_replace($"family_raw", "\\(ent\\.\\s*(.+)\\)", "$1"))
-      .withColumn("activity_end", $"death_end")
-      .drop("family_raw")
+    val levels = broadcast(ranksGaz.select(col("uri").as("rank_uri"), col("level")))
+    triples
+      .filter(pred.isin(NS.RDF_TYPE, Removed, Given, Family, Rank, BirthPlace, DeathPlace, Unit,
+        Occupation, Birth, Death))
+      .join(levels, pred === Rank && obj === col("rank_uri"), "left")
+      .groupBy(col("subj").as("person_uri")).agg(
+        max(when(isRecord, true)).as("is_person"),
+        max(when(pred === Removed, true)).as("removed"),
+        min(when(isRecord, col("docId"))).as("docId"),
+        first(Given).as("given"),
+        first(Family).as("family_raw"),
+        objs(Rank).as("rank"),
+        max(when(pred === Rank, col("level"))).as("rank_level"),
+        objs(BirthPlace).as("birth_place"),
+        objs(DeathPlace).as("death_place"),
+        objs(Unit).as("unit"),
+        objs(Occupation).as("occupation"),
+        min(date(Birth)).as("birth_begin"), max(date(Birth)).as("birth_end"),
+        min(date(Death)).as("death_begin"), max(date(Death)).as("death_end"))
+      .filter(col("is_person") && col("removed").isNull)
+      .select(col("person_uri"), col("docId"), col("given"), col("rank"), col("rank_level"),
+        col("birth_place"), col("death_place"), col("unit"), col("occupation"),
+        col("birth_begin"), col("birth_end"), col("death_begin"), col("death_end"),
+        // previous-name unification: "Heino (ent. Kalmari)" -> "Heino Kalmari"
+        // (linker.py:143)
+        regexp_replace(col("family_raw"), "\\(ent\\.\\s*(.+)\\)", "$1").as("family"),
+        col("death_end").as("activity_end"))
   }
 
   /** Blocking keys for one side: composite conjunction blocks
@@ -209,10 +216,10 @@ object RecordLinkage {
     * (crm:P70_documents shape like construct_people.sparql). */
   def linkPersons(triples: DataFrame, ranksGaz: DataFrame, personsGaz: DataFrame,
                   threshold: Double = 0.8): DataFrame = {
-    // the feature plan (a dozen aggregating self-joins over the triples
-    // table) feeds BOTH the blocking branch and the scoring branch — left
-    // lazy it executes twice inside the one linking action; checkpoint it
-    // once (lazy: materializes on first use)
+    // the feature plan (a subject-keyed aggregate over the triples table)
+    // feeds BOTH the blocking branch and the scoring branch — left lazy it
+    // executes twice inside the one linking action; checkpoint it once
+    // (lazy: materializes on first use)
     val feats = prisonerFeatures(triples, ranksGaz).localCheckpoint(false)
     val links = scorePairs(candidatePairs(feats, personsGaz), feats, personsGaz, threshold)
     val spark = triples.sparkSession

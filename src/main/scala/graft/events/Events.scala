@@ -260,85 +260,49 @@ object Events {
     *    info values produce no solution rows of their own — the FILTER
     *    inside the OPTIONAL removes them). */
   def relatedPeriods(triples: DataFrame): DataFrame = {
-    val spark = triples.sparkSession
-    import spark.implicits._
-    val persons = triples
-      .filter($"pred" === NS.RDF_TYPE && $"objValue" === (NS.SCHEMA_WARSA + "PrisonerRecord"))
-      .select($"subj", $"docId")
+    val pred = col("pred")
+    val obj = col("objValue")
+    val capture = NS.SCHEMA_POW + "date_of_capture"
+    val collection = NS.SCHEMA_POW + "winter_war_collection"
+    val info = NS.SCHEMA_POW + "additional_information"
+    val winter = lit(CONFLICTS + "WinterWar")
+    val continuation = lit(CONFLICTS + "ContinuationWar")
+    val isRecord = pred === NS.RDF_TYPE && obj === (NS.SCHEMA_WARSA + "PrisonerRecord")
+    val dated = col("objDatatype") === NS.XSD_DATE
+    // block 1: one war per parseable capture value; block 2, rows with a
+    // capture literal: the per-value winter-first cascade (null: no match)
+    val captureWar = when(pred === capture, when(dated,
+        when(obj < "1941-06-24", winter).otherwise(continuation))
+      .when(lower(obj).rlike("talvisota|39|40"), winter)
+      .when(lower(obj).rlike("(4[12345])|jatkosota"), continuation))
 
-    val capture = triples.filter($"pred" === (NS.SCHEMA_POW + "date_of_capture"))
-      .select($"subj", $"objValue", $"objDatatype")
-    val wwcSubjects = triples
-      .filter($"pred" === (NS.SCHEMA_POW + "winter_war_collection"))
-      .select($"subj").distinct()
-
-    // block 1: one war per parseable capture value
-    val dated = capture.filter($"objDatatype" === NS.XSD_DATE)
-      .select($"subj",
-        when($"objValue" < "1941-06-24", lit(CONFLICTS + "WinterWar"))
-          .otherwise(lit(CONFLICTS + "ContinuationWar")).as("war"))
-
-    // block 2, rows with a capture literal: per-value winter-first cascade
-    val undatedWar = capture
-      .filter($"objDatatype".isNull || $"objDatatype" =!= NS.XSD_DATE)
-      .select($"subj",
-        when(lower($"objValue").rlike("talvisota|39|40"), lit(CONFLICTS + "WinterWar"))
-          .when(lower($"objValue").rlike("(4[12345])|jatkosota"), lit(CONFLICTS + "ContinuationWar"))
-          .as("war"))
-    val undatedResolved = undatedWar.filter($"war".isNotNull)
-    val undatedWwc = undatedWar.filter($"war".isNull)
-      .join(wwcSubjects, Seq("subj"), "left_semi")
-      .select($"subj", lit(CONFLICTS + "WinterWar").as("war"))
-
-    // block 2, rows with NO capture literal: info fallback with
-    // RECORD-level winter precedence. SPARQL algebra (period.sparql:35-48):
-    // the left side entering the info OPTIONALs is ONE solution row per
-    // no-capture subject with ?date/?war unbound, so
-    //  - the winter-info OPTIONAL's group keeps only regex-MATCHING info
-    //    values (the FILTER is inside the OPTIONAL — a non-matching
-    //    sibling value never yields a solution row); if any match, the
-    //    single left row expands to one row PER matching value, each with
-    //    ?war=WinterWar bound;
-    //  - the continuation-info OPTIONAL then finds ?war already bound on
-    //    every row (incompatible with its ContinuationWar BIND), so it can
-    //    fire only when NO info value matched winter;
-    //  - the wwc OPTIONAL fires only when NO info value matched either
-    //    regex (or the subject has no info triples at all) — never on a
-    //    "sibling row" of a match, because non-matching values produce no
-    //    rows.
-    // (Round 3 had a per-VALUE wwc here — a record with info values
-    // "palasi 1944" + "ei tietoa" + wwc wrongly gained WinterWar; Jena
-    // emits only ContinuationWar. Round-4 advice item, reverted.)
-    val noCapture = persons.select($"subj")
-      .join(capture.select($"subj").distinct(), Seq("subj"), "left_anti")
-    val infoClass = triples.filter($"pred" === (NS.SCHEMA_POW + "additional_information"))
-      .join(noCapture, Seq("subj"), "left_semi")
-      .groupBy($"subj")
-      .agg(
-        max(when($"objValue".rlike("19(39|40)"), 1).otherwise(0)).as("has_w"),
-        max(when($"objValue".rlike("194[12345]"), 1).otherwise(0)).as("has_c"))
-    val infoResolved = infoClass
-      .select($"subj",
-        when($"has_w" === 1, lit(CONFLICTS + "WinterWar"))
-          .when($"has_c" === 1, lit(CONFLICTS + "ContinuationWar"))
-          .as("war"))
-      .filter($"war".isNotNull)
-    val infoUnbound = infoClass.filter($"has_w" === 0 && $"has_c" === 0).select($"subj")
-      .unionByName(noCapture
-        .join(infoClass.select($"subj"), Seq("subj"), "left_anti")
-        .select($"subj"))
-    val noCaptureWwc = infoUnbound
-      .join(wwcSubjects, Seq("subj"), "left_semi")
-      .select($"subj", lit(CONFLICTS + "WinterWar").as("war"))
-
-    dated.unionByName(undatedResolved).unionByName(undatedWwc)
-      .unionByName(infoResolved).unionByName(noCaptureWwc)
-      .distinct()
-      .join(persons, Seq("subj"))
-      .select($"subj", lit(NS.SCHEMA_WARSA + "events/related_period").as("pred"),
-        $"war".as("objValue"), lit(true).as("objIsUri"),
+    // one pass per record; the wars it emits are the capture wars plus
+    // the winter_war_collection fill of an unmatched capture value, or —
+    // for a record with no capture literal — the record-level info
+    // fallback (winter first), else the collection fill
+    val record = triples.filter(pred.isin(NS.RDF_TYPE, capture, collection, info))
+      .groupBy(col("subj")).agg(
+        max(when(isRecord, true)).as("is_person"),
+        min(when(isRecord, col("docId"))).as("docId"),
+        collect_set(captureWar).as("capture_wars"),
+        max(when(pred === capture, true)).as("has_capture"),
+        max(when(pred === capture && captureWar.isNull, true)).as("unmatched_capture"),
+        max(when(pred === collection, true)).as("wwc"),
+        max(when(pred === info && obj.rlike("19(39|40)"), true)).as("info_winter"),
+        max(when(pred === info && obj.rlike("194[12345]"), true)).as("info_continuation"))
+    val filled = array(
+      when(col("unmatched_capture") && col("wwc"), winter),
+      when(col("has_capture").isNull,
+        when(col("info_winter"), winter)
+          .when(col("info_continuation"), continuation)
+          .when(col("wwc"), winter)))
+    record.filter(col("is_person"))
+      .select(col("subj"), col("docId"), explode(array_distinct(concat(
+        col("capture_wars"), filter(filled, _.isNotNull)))).as("war"))
+      .select(col("subj"), lit(NS.SCHEMA_WARSA + "events/related_period").as("pred"),
+        col("war").as("objValue"), lit(true).as("objIsUri"),
         lit(null).cast("string").as("objLang"),
-        lit(null).cast("string").as("objDatatype"), $"docId")
+        lit(null).cast("string").as("objDatatype"), col("docId"))
   }
 
   /** construct_documents_links.sparql: records with NO person link get a

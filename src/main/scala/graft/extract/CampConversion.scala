@@ -14,30 +14,21 @@ object CampConversion {
     * namespace + slugify(prop1 value, else prop2 value, else "unknown");
     * all triples of the old subject are copied to the new one and the old
     * ones dropped (reference: src/csv_to_rdf.py:382-398 simulates this
-    * with add+remove loops; here it is one projection + broadcast join —
-    * no mutation). Only subjects of `classUri` are re-minted. */
+    * with add+remove loops; here it is one subject-keyed aggregate for the
+    * old → new mapping + broadcast join — no mutation). Only subjects of
+    * `classUri` are re-minted. */
   def remintSubjects(triples: DataFrame, classUri: String,
                      prop1: String, prop2: String, namespace: String): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
 
-    val targets = triples
-      .filter($"pred" === NS.RDF_TYPE && $"objValue" === classUri)
-      .select($"subj").distinct()
-
-    // plain aliases: property URIs contain dots, which Column-name parsing
-    // would read as struct-field access
-    def valueOf(prop: String, alias: String) =
-      triples.filter($"pred" === prop && !$"objIsUri")
-        .groupBy($"subj").agg(min($"objValue").as(alias))
-
-    val mapping = targets
-      .join(valueOf(prop1, "__p1"), Seq("subj"), "left")
-      .join(valueOf(prop2, "__p2"), Seq("subj"), "left")
-      .select($"subj",
-        concat(lit(namespace),
-          Normalize.slugifyCol(coalesce($"__p1", $"__p2", lit("unknown"))))
-          .as("new_subj"))
+    def valueOf(prop: String) = min(when($"pred" === prop && !$"objIsUri", $"objValue"))
+    val mapping = triples.filter($"pred".isin(NS.RDF_TYPE, prop1, prop2))
+      .groupBy($"subj").agg(
+        max(when($"pred" === NS.RDF_TYPE && $"objValue" === classUri, true)).as("target"),
+        coalesce(valueOf(prop1), valueOf(prop2), lit("unknown")).as("key"))
+      .filter($"target")
+      .select($"subj", concat(lit(namespace), Normalize.slugifyCol($"key")).as("new_subj"))
 
     triples.join(broadcast(mapping), Seq("subj"), "left")
       .select(coalesce($"new_subj", $"subj").as("subj"),

@@ -255,27 +255,23 @@ object Linkers {
 
   /** E23: the war-period rule — capture date < 1941-06-24 ⇒ WinterWar,
     * else ContinuationWar, with the winter-war-collection fallback
-    * (sparql/period.sparql:7-49). Returns (docId, period_uri). */
+    * (sparql/period.sparql:7-49). Returns (docId, period_uri): one
+    * `groupBy(docId)` over the capture and collection rows. */
   def docPeriods(triples: DataFrame): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
-    val capture = triples
-      .filter($"pred" === (NS.SCHEMA_POW + "date_of_capture"))
-      .select($"docId", $"objValue", $"objDatatype")
-      .withColumn("d",
-        when($"objDatatype" === NS.XSD_DATE, to_date($"objValue")))
-    val winterFromDate = capture.filter($"d".isNotNull)
-      .groupBy($"docId").agg(min($"d").as("mind"))
+    val capture = NS.SCHEMA_POW + "date_of_capture"
+    val collection = NS.SCHEMA_POW + "winter_war_collection"
+    triples.filter($"pred".isin(capture, collection))
+      .groupBy($"docId").agg(
+        min(when($"pred" === capture && $"objDatatype" === NS.XSD_DATE,
+          to_date($"objValue"))).as("mind"),
+        max(when($"pred" === collection, true)).as("wwc"))
+      // fallback: a winter_war_collection triple and no dated capture
+      .filter($"mind".isNotNull || $"wwc")
       .select($"docId",
-        when($"mind" < lit("1941-06-24").cast("date"),
-          lit(NS.EVENTS + "WinterWar")).otherwise(lit(NS.EVENTS + "ContinuationWar"))
-          .as("period_uri"))
-    // fallback: docs with a winter_war_collection triple and no dated capture
-    val wwc = triples.filter($"pred" === (NS.SCHEMA_POW + "winter_war_collection"))
-      .select($"docId").distinct()
-      .join(winterFromDate.select($"docId"), Seq("docId"), "left_anti")
-      .select($"docId", lit(NS.EVENTS + "WinterWar").as("period_uri"))
-    winterFromDate.unionByName(wwc)
+        when($"mind" >= lit("1941-06-24").cast("date"), lit(NS.EVENTS + "ContinuationWar"))
+          .otherwise(lit(NS.EVENTS + "WinterWar")).as("period_uri"))
   }
 
   /** J10: Sotilaan Ääni magazine references — exact multimap equi-join
@@ -409,20 +405,19 @@ object Linkers {
       .select($"uri",
         coalesce($"description", $"label", $"literal").as("plabel"),
         $"location")
-    val entityTriples =
-      entities.select($"uri".as("subj"), lit(NS.RDF_TYPE).as("pred"),
-        lit(NS.SCHEMA_WARSA + "Source").as("objValue"), lit(true).as("objIsUri"),
+    // the three triples of a source entity come from one pass over the
+    // entity aggregate (type, label, and the location when there is one)
+    def entityRow(pred: String, obj: Column, isUri: Boolean) =
+      struct(lit(pred).as("pred"), obj.as("objValue"), lit(isUri).as("objIsUri"))
+    val entityTriples = entities
+      .select($"uri".as("subj"), explode(array(
+        entityRow(NS.RDF_TYPE, lit(NS.SCHEMA_WARSA + "Source"), isUri = true),
+        entityRow(NS.SKOS_PREF_LABEL, $"plabel", isUri = false),
+        entityRow(NS.SCHEMA_POW + "location", $"location", isUri = false))).as("t"))
+      .filter($"t.pred" =!= (NS.SCHEMA_POW + "location") || $"t.objValue".isNotNull)
+      .select($"subj", $"t.pred", $"t.objValue", $"t.objIsUri",
         lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),
         lit("").as("docId"))
-      .unionByName(entities.select($"uri".as("subj"), lit(NS.SKOS_PREF_LABEL).as("pred"),
-        $"plabel".as("objValue"), lit(false).as("objIsUri"),
-        lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),
-        lit("").as("docId")))
-      .unionByName(entities.filter($"location".isNotNull)
-        .select($"uri".as("subj"), lit(NS.SCHEMA_POW + "location").as("pred"),
-          $"location".as("objValue"), lit(false).as("objIsUri"),
-          lit(null).cast("string").as("objLang"), lit(null).cast("string").as("objDatatype"),
-          lit("").as("docId")))
 
     val removed = triples.filter($"pred" === NS.DCT_SOURCE && !$"objIsUri")
     (rewritten.unionByName(entityTriples), removed.toDF())

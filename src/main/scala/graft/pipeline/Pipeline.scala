@@ -60,8 +60,9 @@ object Pipeline {
     // minting rule, so location links resolve into this graph.
     store.stage("camps", metrics = Seq("triples" -> count(lit(1)))) {
       // localCheckpoint between the chain links: constructCamps references
-      // its input ~8 times and remintSubjects its input 4 times — left
-      // lazy, the raw→remint→remint chain (with its shuffles) re-executes
+      // its input ~8 times and remintSubjects its input twice (the mapping
+      // aggregate and the re-keyed triples) — left lazy, the
+      // raw→remint→remint chain (with its shuffles) re-executes
       // MULTIPLICATIVELY under those references (measured: ~8 s warm on 96
       // rows, pure job/shuffle overhead). The camp gazetteer is bounded at
       // any corpus scale (a fixed camp registry, not per-document data),
@@ -99,12 +100,6 @@ object Pipeline {
     val pruned = store.stage("pruned", sortCols = Seq("pred")) {
       Privacy.prunePersons(extracted, Gazetteers.casualtiesNameCounts(spark), today)
     }
-    // the pruning pass persists its person-sized classification frames for
-    // the duration of the stage write; once the snapshot is committed (or
-    // was resumed) nothing reads them again — release the executor storage
-    // instead of pinning it for the remaining stages. Nothing else is
-    // cached at this point in the DAG, so the blanket clear is exact.
-    spark.catalog.clearCache()
 
     // -- 3. linking (process.sh:30-96) ------------------------------------
     // media linkers return (links, media-doc entities): links join the

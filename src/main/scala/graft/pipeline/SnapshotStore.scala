@@ -2,11 +2,16 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned-snapshot table layer — the checkpoint/resume contract of the
   * north rule (Iceberg-style snapshots; no Iceberg runtime jar ships in
@@ -25,9 +30,13 @@ import org.apache.spark.sql.functions._
   * committed version; an interrupted write leaves no manifest and is
   * ignored/overwritten.
   *
-  * The manifest records row count, caller-supplied metrics (extraction /
-  * link rates), and per-partition-file lineage (file → rows) so a resumed
-  * run can verify inputs and a scheduler can re-derive any partition.
+  * The manifest records row count, the stage's wall time (`sec`, compute
+  * included), caller-supplied metrics (extraction / link rates), the
+  * written schema, and per-partition-file lineage (file → bytes, rows) so a
+  * resumed run can verify inputs and a scheduler can re-derive any
+  * partition. Reads take the schema from the manifest, so reading a
+  * snapshot back launches no Parquet schema-inference job; a manifest
+  * without one is an error, never a silent fallback to inference.
   */
 final class SnapshotStore(spark: SparkSession, workDir: String) {
 
@@ -55,12 +64,20 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
   def read(stage: String): DataFrame = {
     val v = latestVersion(stage).getOrElse(
       sys.error(s"no committed snapshot for stage '$stage' under $workDir"))
-    spark.read.parquet(versionDir(stage, v).toString)
+    val manifest = manifestPath(stage, v)
+    val schema = Option(new ObjectMapper().readTree(readText(manifest)).get("schema"))
+      .getOrElse(sys.error(s"snapshot manifest $manifest records no schema"))
+    spark.read.schema(DataType.fromJson(schema.toString).asInstanceOf[StructType])
+      .parquet(versionDir(stage, v).toString)
   }
 
   def readManifest(stage: String): String = {
     val v = latestVersion(stage).getOrElse(sys.error(s"no snapshot for '$stage'"))
-    val in = fs.open(manifestPath(stage, v))
+    readText(manifestPath(stage, v))
+  }
+
+  private def readText(p: Path): String = {
+    val in = fs.open(p)
     try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
@@ -76,13 +93,18 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
     * never a second pass over the data. */
   def write(stage: String, df: DataFrame, partitionCols: Seq[String] = Nil,
             metrics: Seq[(String, Column)] = Nil,
-            sortCols: Seq[String] = Nil): Int = {
-    // wall time from job start to manifest assembly rides the manifest
-    // ("sec"): the compute block upstream is lazy, so this write job IS the
-    // stage's execution — persisted per-stage timings are the end-to-end
-    // DAG regression signal a resumed/audited run can read back without
-    // re-running anything
-    val t0 = System.nanoTime()
+            sortCols: Seq[String] = Nil): Int =
+    commit(stage, df, partitionCols, metrics, sortCols, System.nanoTime())
+
+  /** [[write]] with the stage clock started at `t0`. The wall time from
+    * `t0` to manifest assembly rides the manifest ("sec"): [[stage]]
+    * starts it before `compute`, because a compute block may run eager
+    * work (checkpoints, nested stages) before the write job — persisted
+    * per-stage timings are the end-to-end DAG regression signal a
+    * resumed/audited run can read back without re-running anything. */
+  private def commit(stage: String, df: DataFrame, partitionCols: Seq[String],
+                     metrics: Seq[(String, Column)], sortCols: Seq[String],
+                     t0: Long): Int = {
     val v = latestVersion(stage).map(_ + 1).getOrElse(0)
     val dir = versionDir(stage, v)
 
@@ -110,14 +132,19 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
     }
 
     // per-partition lineage from parquet FOOTERS (metadata-only): every
-    // data file with its byte size and row count; row-level lineage is
-    // carried IN the data as the docId column
+    // data file with its byte size (from the listing) and row count; row-
+    // level lineage is carried IN the data as the docId column. Footers
+    // are independent reads, so they run in parallel.
     val conf = spark.sparkContext.hadoopConfiguration
-    val fileMeta = listFilesRec(dir).filter(_.getName.endsWith(".parquet")).map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      val n = try reader.getRecordCount finally reader.close()
-      (f, fs.getFileStatus(f).getLen, n)
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val footers = listFilesRec(dir).filter(_.getPath.getName.endsWith(".parquet")).map { st =>
+      Future {
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val n = try reader.getRecordCount finally reader.close()
+        (st.getPath, st.getLen, n)
+      }
     }
+    val fileMeta = Await.result(Future.sequence(footers), Duration.Inf)
     val rows = fileMeta.map(_._3).sum
     val files = fileMeta.map { case (f, bytes, n) =>
       s"""    {"file": ${js(rel(dir, f))}, "bytes": $bytes, "rows": $n}"""
@@ -131,6 +158,7 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
          |  "sec": ${String.format(java.util.Locale.ROOT, "%.1f",
               Double.box((System.nanoTime() - t0) / 1e9))},
          |  "partition_columns": [${partitionCols.map(js).mkString(", ")}],
+         |  "schema": ${df.schema.json},
          |  "metrics": {${metricVals.map { case (k, x) => s"${js(k)}: $x" }.mkString(", ")}},
          |  "files": [
          |${files.mkString(",\n")}
@@ -154,8 +182,7 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
            (compute: => DataFrame): DataFrame = {
     if (!exists(name)) {
       val t0 = System.nanoTime()
-      val df = compute
-      write(name, df, partitionCols, metrics, sortCols)
+      commit(name, compute, partitionCols, metrics, sortCols, t0)
       println(f"[stage-time] $name ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
     read(name)
@@ -199,10 +226,10 @@ final class SnapshotStore(spark: SparkSession, workDir: String) {
     if (fs.exists(dir)) fs.delete(dir, true)
   }
 
-  private def listFilesRec(dir: Path): Seq[Path] = {
+  private def listFilesRec(dir: Path): Seq[FileStatus] = {
     val it = fs.listFiles(dir, true)
-    val buf = scala.collection.mutable.ArrayBuffer[Path]()
-    while (it.hasNext) buf += it.next().getPath
+    val buf = scala.collection.mutable.ArrayBuffer[FileStatus]()
+    while (it.hasNext) buf += it.next()
     buf.toSeq
   }
   private def rel(base: Path, p: Path): String =

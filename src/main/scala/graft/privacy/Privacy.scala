@@ -16,15 +16,28 @@ import graft.model.NS
   * the reference's own test asserts subject-set preservation
   * (src/tests.py:117-129).
   *
-  * Spark shape: classification is one aggregation over the date triples;
-  * removal is `left_anti` against the (subject, predicate[, reification])
-  * hide-set; additions are small unions. The reification cascade (remove a
-  * triple ⇒ remove its 5 reification triples, prune_nonpublic.py:65-78)
-  * is a join from hidden (s,p) pairs to reification subjects.
+  * Spark shape: one `groupBy(subj)` over the rows of seven predicates
+  * builds a profile per subject — the classification dates, the family
+  * names (each tagged common/uncommon by a broadcast join before the
+  * aggregate), the captivity resources, and a reification node's
+  * rdf:subject / rdf:predicate sets. Everything else derives from that one
+  * shuffle: a per-subject decision frame (health, personal, family,
+  * reification and captivity-label flags) applied to the triples with a
+  * single left join plus a predicate, and the replacement and flag
+  * triples as projections of the person rows. The reification cascade
+  * (remove a triple ⇒ remove its reification node with all 5 of its
+  * triples, prune_nonpublic.py:65-78) is one join from reification nodes
+  * to the person rows of their rdf:subject values.
   */
 object Privacy {
 
   private val castDateUdf = udf(Converters.castDateLenient _)
+
+  private val PrisonerRecord = NS.SCHEMA_WARSA + "PrisonerRecord"
+  private val DateOfDeath = NS.SCHEMA_POW + "date_of_death"
+  private val DateOfBirth = NS.SCHEMA_WARSA + "date_of_birth"
+  private val FamilyName = NS.SCHEMA_WARSA + "family_name"
+  private val Captivity = NS.SCHEMA_POW + "captivity"
 
   val healthPreds: Seq[String] = Seq(
     NS.SCHEMA_POW + "cause_of_death",
@@ -57,36 +70,33 @@ object Privacy {
     * come from the pipeline's pinned run date (SnapshotStore.pinRunDate) —
     * a wall-clock default would make a resume across midnight classify
     * differently than the run it resumes. */
-  def classify(triples: DataFrame, today: LocalDate): DataFrame = {
-    val spark = triples.sparkSession
-    import spark.implicits._
+  def classify(triples: DataFrame, today: LocalDate): DataFrame =
+    profiles(triples.filter(col("pred").isin(NS.RDF_TYPE, DateOfDeath, DateOfBirth)), today)
+      .filter(col("is_person"))
+      .select(col("subj"), col("cls"))
+
+  /** One row per subject of `rows`: `is_person`, the classification dates
+    * and `cls` (meaningful on person rows), plus the `extra` aggregates.
+    * A death date that does not parse makes the record died-recently; the
+    * latest parsed one decides otherwise (prune_nonpublic.py:204). */
+  private def profiles(rows: DataFrame, today: LocalDate, extra: Column*): DataFrame = {
     val cutoff = java.sql.Date.valueOf(today.minusYears(50))
     val aliveDob = java.sql.Date.valueOf(LocalDate.of(1910, 9, 30))
-
-    val persons = triples
-      .filter($"pred" === NS.RDF_TYPE && $"objValue" === (NS.SCHEMA_WARSA + "PrisonerRecord"))
-      .select($"subj").distinct()
-
-    val deaths = triples.filter($"pred" === (NS.SCHEMA_POW + "date_of_death"))
-      .select($"subj", castDateUdf($"objValue").as("d"))
-      .groupBy($"subj").agg(
-        max($"d").as("latest_death"), // latest (prune_nonpublic.py:204)
-        max(when($"d".isNull, 1).otherwise(0)).as("death_without_date"),
-        count(lit(1)).as("n_death"))
-
-    val dob = triples.filter($"pred" === (NS.SCHEMA_WARSA + "date_of_birth"))
-      .groupBy($"subj").agg(min(castDateUdf($"objValue")).as("dob"))
-
-    persons
-      .join(deaths, Seq("subj"), "left")
-      .join(dob, Seq("subj"), "left")
-      .select($"subj",
-        when(($"latest_death".isNotNull && $"latest_death" >= lit(cutoff)) ||
-             $"death_without_date" === 1, "died_recently")
-          .when($"latest_death".isNull &&
-                ($"death_without_date".isNull || $"death_without_date" === 0) &&
-                $"dob".isNotNull && $"dob" >= lit(aliveDob), "possibly_alive")
-          .otherwise("public").as("cls"))
+    val pred = col("pred")
+    val d = col("d")
+    val aggs = Seq(
+      max(when(pred === NS.RDF_TYPE && col("objValue") === PrisonerRecord, true)).as("is_person"),
+      max(when(pred === DateOfDeath, d)).as("latest_death"),
+      max(when(pred === DateOfDeath, d.isNull)).as("death_without_date"),
+      min(when(pred === DateOfBirth, d)).as("dob")) ++ extra
+    rows
+      .withColumn("d", when(pred.isin(DateOfDeath, DateOfBirth), castDateUdf(col("objValue"))))
+      .groupBy(col("subj")).agg(aggs.head, aggs.tail: _*)
+      .withColumn("cls",
+        when(col("latest_death") >= lit(cutoff) || col("death_without_date"), "died_recently")
+          .when(col("latest_death").isNull && !coalesce(col("death_without_date"), lit(false)) &&
+                col("dob") >= lit(aliveDob), "possibly_alive")
+          .otherwise("public"))
   }
 
   /** Common family names: endpoint count >= 2 AND endpoint+local >= 4
@@ -104,132 +114,121 @@ object Privacy {
       .select($"fam".as("family"))
   }
 
+  /** Does a person with these flags hide its triples of `pred`? The
+    * health predicates for every non-public record, the personal ones for
+    * possibly-alive records, and the family name of a possibly-alive
+    * record that has an uncommon one (prune_nonpublic.py:97-114,149-175). */
+  private def hides(pred: Column, hidden: Column, alive: Column, anyUncommon: Column): Column =
+    (hidden && pred.isin(healthPreds: _*)) ||
+      (alive && (pred.isin(personalPreds: _*) || (anyUncommon && pred === FamilyName)))
+
   /** Full pruning pass. Returns the redacted triple set. `today` must be
     * the pinned run date — no wall-clock default (see [[classify]]). */
   def prunePersons(triples: DataFrame, endpointNames: DataFrame,
                    today: LocalDate): DataFrame = {
-    val spark = triples.sparkSession
-    import spark.implicits._
+    val pred = col("pred")
+    val obj = col("objValue")
 
-    // The classification / common-name aggregates are each consumed by
-    // several of the joins below; left lazy, every consumer re-executes
-    // the aggregation subtree inside the one pruning job. persist (not
-    // localCheckpoint) keeps lineage — fault-tolerant at cluster scale,
-    // spills to disk — and these frames are |persons|- and
-    // |family-names|-sized, orders of magnitude under the triple set.
-    import org.apache.spark.storage.StorageLevel
-    val cls = classify(triples, today).persist(StorageLevel.MEMORY_AND_DISK)
-    val hidden = cls.filter($"cls" =!= "public") // health hidden for both
-    val alive = cls.filter($"cls" === "possibly_alive")
-    val common = commonNames(triples, endpointNames)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // family-name rows learn their commonness before the aggregate, so the
+    // profile carries it; the common-name set is surname-sized (a
+    // dimension), hence broadcast
+    val common = broadcast(commonNames(triples, endpointNames)
+      .select(col("family").as("common_family"), lit(true).as("is_common")))
+    val rows = triples
+      .filter(pred.isin(NS.RDF_TYPE, DateOfDeath, DateOfBirth, FamilyName, Captivity,
+        NS.RDF_SUBJECT, NS.RDF_PREDICATE))
+      .join(common, pred === FamilyName && obj === col("common_family"), "left")
+    def setOf(p: Column) = collect_set(when(p, obj))
+    // every frame below derives from this one; left lazy, column pruning
+    // would give each consumer its own trimmed copy of the aggregate — a
+    // separate shuffle that exchange reuse cannot share — so the person
+    // and reification-node rows are materialized once
+    val profile = profiles(rows, today,
+      max(when(pred === FamilyName, col("is_common").isNull)).as("any_uncommon"),
+      setOf(pred === FamilyName && col("is_common")).as("common_families"),
+      setOf(pred === Captivity).as("captivities"),
+      setOf(pred === NS.RDF_SUBJECT).as("rsubjs"),
+      setOf(pred === NS.RDF_PREDICATE).as("rpreds"))
+      .filter(col("is_person") || size(col("rpreds")) > 0)
+      .localCheckpoint()
 
-    // family names of possibly-alive records, flagged common/uncommon
-    val aliveFamily = triples.filter($"pred" === (NS.SCHEMA_WARSA + "family_name"))
-      .join(alive.select("subj"), Seq("subj"))
-      .join(common.withColumn("is_common", lit(true)),
-        $"objValue" === $"family", "left")
-      .select($"subj", $"objValue".as("family"),
-        coalesce($"is_common", lit(false)).as("is_common"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val persons = profile.filter(col("is_person")).select(col("subj"),
+      (col("cls") =!= "public").as("hidden"), // health hidden for both
+      (col("cls") === "possibly_alive").as("alive"),
+      coalesce(col("any_uncommon"), lit(false)).as("any_uncommon"),
+      col("common_families"), col("captivities"))
+    val hidden = persons.filter(col("hidden"))
+    val alive = persons.filter(col("alive"))
 
-    // ---- build the hide-set of (subj, pred) pairs ------------------------
-    val hideHealth = hidden.select($"subj")
-      .crossJoin(spark.createDataset(healthPreds).toDF("hpred"))
-    val hidePersonal = alive.select($"subj")
-      .crossJoin(spark.createDataset(personalPreds).toDF("hpred"))
-    val hideFamily = aliveFamily.filter(!$"is_common")
-      .select($"subj", lit(NS.SCHEMA_WARSA + "family_name").as("hpred"))
-    val hideSet = hideHealth.unionByName(hidePersonal).unionByName(hideFamily).distinct()
+    // ---- per-subject decision frame --------------------------------------
+    // a reification node goes when ANY of its (rdf:subject, rdf:predicate)
+    // pairs is a hidden statement of a person
+    val hiddenReifs = profile.filter(size(col("rpreds")) > 0)
+      .select(col("subj").as("reif"), explode(col("rsubjs")).as("rs"), col("rpreds"))
+      .join(hidden.select(col("subj").as("rs"), col("hidden"), col("alive"), col("any_uncommon")), "rs")
+      .filter(exists(col("rpreds"), hides(_, col("hidden"), col("alive"), col("any_uncommon"))))
+      .select(col("reif").as("subj"), lit(true).as("reif"))
+    // the labels of a possibly-alive record's captivity resources go
+    val captivityLabels = alive.select(explode(col("captivities")).as("subj"),
+      lit(true).as("captivity"))
+    // a flag a row does not carry is null, which the filter below reads as
+    // "keep"
+    val decisions = hidden.select("subj", "hidden", "alive", "any_uncommon")
+      .unionByName(hiddenReifs, allowMissingColumns = true)
+      .unionByName(captivityLabels, allowMissingColumns = true)
+      .groupBy(col("subj")).agg(max("hidden").as("hidden"), max("alive").as("alive"),
+        max("any_uncommon").as("any_uncommon"), max("reif").as("reif"),
+        max("captivity").as("captivity"))
 
-    // captivity label redaction: labels of captivity resources of alive recs
-    val captivityOf = triples.filter($"pred" === (NS.SCHEMA_POW + "captivity"))
-      .select($"subj", $"objValue".as("captivity"))
-      .join(alive.select("subj"), Seq("subj"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val kept = triples.join(decisions, Seq("subj"), "left")
+      .filter(!coalesce(
+        hides(pred, col("hidden"), col("alive"), col("any_uncommon")) || col("reif") ||
+          (col("captivity") && pred === NS.SKOS_PREF_LABEL),
+        lit(false)))
+      .select(triples.columns.toIndexedSeq.map(col): _*)
 
-    val hideCaptivityLabels = captivityOf
-      .select($"captivity".as("subj"), lit(NS.SKOS_PREF_LABEL).as("hpred")).distinct()
-
-    val allHides = hideSet.unionByName(hideCaptivityLabels)
-
-    // ---- reification cascade --------------------------------------------
-    // a hidden (s,p) removes any reification whose rdf:subject=s ∧
-    // rdf:predicate=p, with all 5 of its triples
-    val reifSubj = triples.filter($"pred" === NS.RDF_SUBJECT)
-      .select($"subj".as("reif"), $"objValue".as("rs"))
-    val reifPred = triples.filter($"pred" === NS.RDF_PREDICATE)
-      .select($"subj".as("reif"), $"objValue".as("rp"))
-    val hiddenReifs = reifSubj.join(reifPred, "reif")
-      .join(hideSet, $"rs" === $"subj" && $"rp" === $"hpred")
-      .select($"reif").distinct()
-
-    // ---- apply -----------------------------------------------------------
-    // explicit renames: both sides derive from `triples`, so positional
-    // column references would resolve to the same attribute (self-join
-    // ambiguity -> trivially-true predicate)
-    val hides2 = allHides.select(col("subj").as("hsubj"), col("hpred"))
-    val kept = triples
-      .join(hides2, triples("subj") === hides2("hsubj") &&
-        triples("pred") === hides2("hpred"), "left_anti")
-      .join(hiddenReifs, triples("subj") === hiddenReifs("reif"), "left_anti")
-
-    // ---- replacement triples --------------------------------------------
-    kept.toDF()
-      .unionByName(replacements(aliveFamily, captivityOf, common))
-      .unionByName(flags(hidden, alive))
+    kept
+      .unionByName(replacements(alive))
+      .unionByName(flag(hidden, NS.SCHEMA_POW + "hide_documents"))
+      .unionByName(flag(alive, NS.SCHEMA_POW + "personal_information_removed"))
       .dropDuplicates("subj", "pred", "objValue", "objIsUri", "objLang", "objDatatype")
   }
 
-  // replacement label triples (prune_nonpublic.py:118-141)
-  private def replacements(aliveFamily: DataFrame, captivityOf: DataFrame,
-                           common: DataFrame): DataFrame = {
-    val spark = aliveFamily.sparkSession
-    import spark.implicits._
-    val restricted = "Nimi rajoitettu"
+  /** A literal triple per row of `df`, with no language tag and docId "". */
+  private def literal(df: DataFrame, subj: Column, pred: String, obj: Column,
+                      datatype: String = null): DataFrame =
+    df.select(subj.as("subj"), lit(pred).as("pred"), obj.as("objValue"),
+      lit(false).as("objIsUri"), lit(null).cast("string").as("objLang"),
+      lit(datatype).cast("string").as("objDatatype"), lit("").as("docId"))
 
-    def mk(df: DataFrame, subjCol: String, pred: String, objCol: Column,
-           lang: String): DataFrame =
-      df.select(col(subjCol).as("subj"), lit(pred).as("pred"),
-        objCol.as("objValue"), lit(false).as("objIsUri"),
-        lit(lang).cast("string").as("objLang"),
-        lit(null).cast("string").as("objDatatype"), lit("").as("docId"))
-
-    val uncommon = aliveFamily.filter(!$"is_common").select($"subj").distinct()
-    val commonRecs = aliveFamily.filter($"is_common")
-
-    val nameRows =
-      mk(uncommon, "subj", NS.SCHEMA_WARSA + "family_name", lit(restricted), null)
-        .unionByName(mk(uncommon, "subj", NS.SKOS_PREF_LABEL, lit(restricted), null))
-        .unionByName(mk(commonRecs, "subj", NS.SKOS_PREF_LABEL, $"family", null))
-
-    val capt = captivityOf
-      .join(aliveFamily.select($"subj", $"family", $"is_common"), Seq("subj"), "left")
-    val captRows =
-      mk(capt.filter(!coalesce($"is_common", lit(false))), "captivity",
-          NS.SKOS_PREF_LABEL, lit("Henkilön sotavankeus"), null)
-        .unionByName(mk(capt.filter(!coalesce($"is_common", lit(false))), "captivity",
-          NS.SKOS_PREF_LABEL, lit("Person's captivity"), null))
-        .unionByName(mk(capt.filter(coalesce($"is_common", lit(false))), "captivity",
-          NS.SKOS_PREF_LABEL,
-          concat(lit("Henkilön "), $"family", lit(" sotavankeus")), null))
-        .unionByName(mk(capt.filter(coalesce($"is_common", lit(false))), "captivity",
-          NS.SKOS_PREF_LABEL,
-          concat(lit("Person's "), $"family", lit(" captivity")), null))
-
-    nameRows.unionByName(captRows).distinct()
+  // replacement label triples (prune_nonpublic.py:118-141): a record with
+  // an uncommon family name gets the restricted name; each common family
+  // name of a record survives as its label and names its captivities,
+  // which otherwise (an uncommon or no family name) get the generic label
+  private def replacements(alive: DataFrame): DataFrame = {
+    val restricted = lit("Nimi rajoitettu")
+    val uncommon = alive.filter(col("any_uncommon"))
+    val commonLabels = alive.select(col("subj"), explode(col("common_families")).as("family"))
+    val capt = alive.select(explode(col("captivities")).as("subj"),
+      col("any_uncommon"), col("common_families"))
+    val generic = capt.filter(col("any_uncommon") || size(col("common_families")) === 0)
+    val named = capt.select(col("subj"), explode(col("common_families")).as("family"))
+    val family = col("family")
+    Seq(
+      literal(uncommon, col("subj"), FamilyName, restricted),
+      literal(uncommon, col("subj"), NS.SKOS_PREF_LABEL, restricted),
+      literal(commonLabels, col("subj"), NS.SKOS_PREF_LABEL, family),
+      literal(generic, col("subj"), NS.SKOS_PREF_LABEL, lit("Henkilön sotavankeus")),
+      literal(generic, col("subj"), NS.SKOS_PREF_LABEL, lit("Person's captivity")),
+      literal(named, col("subj"), NS.SKOS_PREF_LABEL,
+        concat(lit("Henkilön "), family, lit(" sotavankeus"))),
+      literal(named, col("subj"), NS.SKOS_PREF_LABEL,
+        concat(lit("Person's "), family, lit(" captivity")))
+    ).reduce(_ unionByName _)
   }
 
   // hide_documents / personal_information_removed flags
   // (prune_nonpublic.py:222,144)
-  private def flags(hidden: DataFrame, alive: DataFrame): DataFrame = {
-    val spark = hidden.sparkSession
-    import spark.implicits._
-    def flag(df: DataFrame, pred: String): DataFrame =
-      df.select($"subj", lit(pred).as("pred"), lit("true").as("objValue"),
-        lit(false).as("objIsUri"), lit(null).cast("string").as("objLang"),
-        lit(NS.XSD_BOOLEAN).as("objDatatype"), lit("").as("docId"))
-    flag(hidden.select("subj"), NS.SCHEMA_POW + "hide_documents")
-      .unionByName(flag(alive.select("subj"), NS.SCHEMA_POW + "personal_information_removed"))
-  }
+  private def flag(persons: DataFrame, pred: String): DataFrame =
+    literal(persons, col("subj"), pred, lit("true"), NS.XSD_BOOLEAN)
 }

@@ -83,4 +83,13 @@ class CcFastPathSpec extends AnyFunSuite {
     assert(fast == loop)
     assert(fast(hi) == fw && fast(fw) == fw)
   }
+
+  test("union-find skips null-endpoint edges, as components() drops them") {
+    val edges = Seq(("a", "b"), (null, "c"), ("d", null), (null, null), ("b", "e"))
+    val direct = ConnectedComponents.unionFindComponents(edges.iterator).toMap
+    assert(direct == Map("a" -> "a", "b" -> "a", "e" -> "a"), direct)
+    val viaComponents = ConnectedComponents.components(edges.toDF("src", "dst"))
+      .as[(String, String)].collect().toMap
+    assert(viaComponents == direct)
+  }
 }

@@ -95,11 +95,63 @@ class PipelineSpec extends AnyFunSuite {
       s"observe metric missing: $manifest")
   }
 
+  test("snapshot store: read takes the manifest schema — no inference job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_schema").toString
+    val store = new SnapshotStore(spark, dir)
+    val df = Seq((1, "a", Seq("x", "y")), (2, "b", Seq.empty[String]))
+      .toDF("id", "v", "arr")
+    store.write("plain", df)
+    store.write("parted", df, partitionCols = Seq("v"))
+
+    val (plain, jobs) = JobCounter(spark)(store.read("plain"))
+    assert(jobs == 0, s"reading an unpartitioned snapshot launched $jobs jobs")
+    // the manifest schema is exactly what Parquet inference would give
+    for (st <- Seq("plain", "parted")) {
+      val inferred = spark.read.parquet(s"$dir/$st/v=0")
+      assert(store.read(st).schema == inferred.schema, st)
+      assert(store.read(st).exceptAll(inferred).isEmpty, st)
+    }
+    assert(plain.as[(Int, String, Seq[String])].collect().toSet ==
+      Set((1, "a", Seq("x", "y")), (2, "b", Seq.empty[String])))
+  }
+
+  test("snapshot store: a manifest without a schema fails naming its path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_noschema").toString
+    val store = new SnapshotStore(spark, dir)
+    store.write("s", Seq((1, "a")).toDF("id", "v"))
+    val manifest = java.nio.file.Paths.get(dir, "s", "v=0", "_MANIFEST.json")
+    val text = new String(java.nio.file.Files.readAllBytes(manifest), "UTF-8")
+    val stripped = text.linesIterator.filterNot(_.contains("\"schema\"")).mkString("\n")
+    assert(stripped != text)
+    java.nio.file.Files.write(manifest, stripped.getBytes("UTF-8"))
+    // the local filesystem's checksum would flag the edit as corruption
+    java.nio.file.Files.delete(manifest.resolveSibling("._MANIFEST.json.crc"))
+    val e = intercept[RuntimeException](store.read("s"))
+    assert(e.getMessage.contains("s/v=0/_MANIFEST.json") && e.getMessage.contains("schema"),
+      e.getMessage)
+  }
+
+  test("snapshot store: manifest sec covers the stage's compute block") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sec").toString
+    val store = new SnapshotStore(spark, dir)
+    store.stage("slow") { Thread.sleep(1500); Seq(1).toDF("id") }
+    val sec = "\"sec\": ([0-9.]+)".r.findFirstMatchIn(store.readManifest("slow")).get
+      .group(1).toDouble
+    assert(sec >= 1.5, s"manifest sec $sec misses the compute block")
+  }
+
   test("full pipeline over synthetic docs: stages commit, output sane, resume identical") {
     val dir = java.nio.file.Files.createTempDirectory("graft_pipe").toString
     val docs = SynthDocs.fromDocuments(spark, "/root/testdata/sf0.001")
 
-    val out1 = Pipeline.run(spark, docs, dir, today)
+    // job guard, measured on this spec's session (local[4], 4 shuffle
+    // partitions): 106 jobs for this fresh run; the guard is that count
+    // plus 10% headroom. A per-predicate aggregate joined back on the
+    // subject costs several jobs, so a rewrite that brings that shape back
+    // trips it.
+    val (out1, jobs) = JobCounter(spark)(Pipeline.run(spark, docs, dir, today))
+    println(s"[job-guard] fresh pipeline run: $jobs jobs")
+    assert(jobs <= 116, s"fresh pipeline run launched $jobs Spark jobs (guard 116)")
     val n1 = out1.count()
     assert(n1 > 0)
     val k1 = out1.select("subj", "pred", "objValue").as[(String, String, String)]
