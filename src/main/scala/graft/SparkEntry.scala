@@ -1158,12 +1158,12 @@ object SparkEntry {
         |FROM events GROUP BY 1, 2 ORDER BY user_id, h""".stripMargin,
 
     // streaming tumbling drain vs batch mirror restricted to the windows
-    // the final watermark (max ts - 10 min) finalized. Boundary semantics
-    // verified empirically (graft.tools.ProbeR5): a window whose END equals
-    // the final watermark IS emitted by the AvailableNow drain — Spark's
-    // append-mode eviction is `window.end <= watermark` — so the mirror's
-    // `<=` below matches exactly (round-4 advice suggested strict `<`; the
-    // probe shows non-strict is correct, incl. the exact-boundary case)
+    // the final watermark (max ts - 10 min) finalized. A window whose END
+    // equals the final watermark IS emitted by the AvailableNow drain —
+    // Spark's append-mode eviction is `window.end <= watermark` — so the
+    // mirror's `<=` below matches exactly, incl. the exact-boundary case
+    // (pinned by EventStreamsSpec "a window ending at the final watermark
+    // is emitted")
     "events_stream_tumbling" ->
       """WITH wm AS (SELECT max(ts) - INTERVAL 10 MINUTE AS w FROM events),
         |agg AS (

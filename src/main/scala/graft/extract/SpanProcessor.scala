@@ -166,6 +166,4 @@ object SpanProcessor {
     case "dates_death"  => Validators.validateDates(d, before = java.time.LocalDate.now())
     case _ => None
   }
-
-  def instanceClassUri: String = instanceClass
 }

@@ -56,19 +56,6 @@ object Linkers {
       lit(null).cast("string").as("objLang"),
       lit(null).cast("string").as("objDatatype"), col("docId"))
 
-  /** J1 generic: broadcast label equi-join after normalization; first-hit
-    * = deterministic min-uri per (subj, literal) (the reference takes the
-    * first ARPA hit, linker.py:57 — any stable pick satisfies it). */
-  def linkByLabel(triples: DataFrame, sourceProp: String, targetProp: String,
-                  gazetteer: DataFrame /* (uri,label) */): DataFrame = {
-    val g = broadcast(gazetteer.select(col("uri"), fold(col("label")).as("k")))
-    val hit = literals(triples, sourceProp)
-      .withColumn("k", fold(col("literal")))
-      .join(g, "k")
-      .groupBy("subj", "literal", "docId").agg(min("uri").as("uri"))
-    linkTriples(hit, targetProp)
-  }
-
   /** J2: camps — alias remap (linker.py:79-83) then exact join on
     * camp_id | captivity_location. */
   def linkCamps(triples: DataFrame, campsGaz: DataFrame): DataFrame = {

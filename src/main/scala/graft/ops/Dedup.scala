@@ -220,16 +220,6 @@ object Dedup {
     docs.join(keep, Seq(idCol), "left_semi")
   }
 
-  /** Word 3-gram shingles as a distinct array column.
-    *
-    * NOTE: `text` is tokenized INSIDE the transform lambda body here, so
-    * when this inline form lands in a single projection the tokenizer is
-    * re-evaluated per shingle position (the CollapseProject lambda trap).
-    * Fine for tests/small frames; the hot paths materialize a token
-    * column first and use [[shinglesFromTokens]]. */
-  def shingles(text: Column, n: Int = 3): Column =
-    shinglesFromTokens(tokens(text), n)
-
   /** Shingles over an already-MATERIALIZED token array attribute: the
     * attribute is referenced twice (sequence bound + lambda slice), which
     * blocks CollapseProject from inlining the tokenizer into the lambda
@@ -264,12 +254,6 @@ object Dedup {
   private[graft] def minhashSignatureReference(hs: Column, numHashes: Int): Column =
     array((0 until numHashes).map(k =>
       array_min(transform(hs, h => xxhash64(h, lit(k))))): _*)
-
-  /** Convenience one-shot form — inlines the shingle hashing `numHashes`
-    * times, so use only on small frames/tests; production paths
-    * materialize `hs` first (see [[minhashSignatureFromHashes]]). */
-  def minhashSignature(text: Column, numHashes: Int = 64): Column =
-    minhashSignatureFromHashes(transform(shingles(text), s => xxhash64(s)), numHashes)
 
   /** MinHash LSH candidate pairs: signatures banded `bands` × `rowsPerBand`;
     * docs sharing any band bucket become a candidate pair; pairs are then

@@ -91,29 +91,17 @@ object TextAnalysis {
       .groupBy(col("token")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("token")).limit(k)
 
-  /** Non-distinct token bigrams over a MATERIALIZED token-array attribute
-    * (repetition signals need multiplicity; the dedup shingles are
-    * distinct by design). Takes the token ARRAY, not the text: a Column is
-    * an AST, so an inline `split` argument would be duplicated into the
-    * lambda body and re-run per gram (see [[fingerprints]]). Shares the
-    * degenerate short-doc convention of [[graft.ops.Dedup.shingles]]: a
-    * doc with fewer tokens than the gram width yields one truncated gram. */
-  def bigrams(toks: Column): Column =
-    transform(sequence(lit(0), greatest(size(toks) - 2, lit(0))),
-      i => concat_ws(" ", slice(toks, i + 1, lit(2))))
-
   /** Gopher-style repetition signals (Rae et al. 2021 §A1.1 — public):
     * per doc, the most-frequent bigram's count and the total bigram
     * count, as exact integers (consumers compute the fraction; exact
     * integers keep the SQL oracle hash-stable). A boilerplate doc has
     * top_gram_count/n_grams near 1.
     *
-    * Computed entirely per row — sort the doc's bigram array and take the
-    * longest equal run with one `aggregate` fold — so the operator is a
-    * NARROW scan: no explode, no shuffle. (The obvious
-    * explode→groupBy(doc, gram)→groupBy(doc) formulation shuffles
-    * |corpus|·|grams| rows twice for a per-document statistic — measured
-    * 10× slower at sf0.1 and unviable at 100 TB.) */
+    * Computed entirely per row — hash the doc's bigrams and take the
+    * largest multiplicity — so the operator is a NARROW scan: no explode,
+    * no shuffle. (The obvious explode→groupBy(doc, gram)→groupBy(doc)
+    * formulation shuffles |corpus|·|grams| rows twice for a per-document
+    * statistic — measured 10× slower at sf0.1 and unviable at 100 TB.) */
   def repetitionCounts(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // tokens and the sorted gram array are MATERIALIZED attributes (each
     // multiply referenced, so CollapseProject keeps the projections).
@@ -133,8 +121,8 @@ object TextAnalysis {
     // count over hashed bigrams equals the count over string bigrams
     // unless two DISTINCT bigrams collide in xxhash64 (~2⁻⁶⁴/pair) —
     // the tolerance the hashed-gram jaccard paths already document;
-    // equality on the real corpora is pinned by the oracle row and
-    // OpsSpec.
+    // equality with the old string fold on the real corpora is pinned by
+    // the oracle row and MaxRunLengthSpec.
     val hashed = col("__rep_hashed")
     val n = size(hashed) // always >= 1: a short doc yields one truncated gram
     df.withColumn("__rep_toks", tokens(lower(col(textCol))))

@@ -1,5 +1,6 @@
 package graft.tools
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.SparkSession
 
 import graft.extract.SynthDocs
@@ -36,14 +37,14 @@ object RunPipeline {
     val sec = (System.nanoTime() - t0) / 1e9
 
     val store = new SnapshotStore(spark, workDir)
+    val json = new ObjectMapper()
     Seq("camps", "schema", "extract", "extract_errors", "pruned", "linked",
       "media", "person_links", "sourced", "canonical", "record_frame",
       "events", "final").foreach { st =>
-      val m = store.readManifest(st)
-      val rows = "\"rows\": (\\d+)".r.findFirstMatchIn(m).map(_.group(1)).getOrElse("?")
-      val sec = "\"sec\": ([0-9.]+)".r.findFirstMatchIn(m).map(_.group(1)).getOrElse("?")
-      val metrics = "\"metrics\": \\{([^}]*)\\}".r.findFirstMatchIn(m).map(_.group(1)).getOrElse("")
-      println(s"[stage] $st rows=$rows sec=$sec metrics={$metrics}")
+      val m = json.readTree(store.readManifest(st))
+      def field(name: String) = Option(m.get(name)).getOrElse(
+        sys.error(s"the '$st' manifest under $workDir records no \"$name\""))
+      println(s"[stage] $st rows=${field("rows")} sec=${field("sec")} metrics=${field("metrics")}")
     }
     println(f"[pipeline] final_triples=$n sec=$sec%.1f workDir=$workDir")
     spark.stop()

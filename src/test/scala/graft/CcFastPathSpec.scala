@@ -84,6 +84,35 @@ class CcFastPathSpec extends AnyFunSuite {
     assert(fast(hi) == fw && fast(fw) == fw)
   }
 
+  test("components() takes the loop regime on a multi-partition edge set") {
+    // byte-sized AQE partitions this small split the distinct edge set over
+    // several partitions, so components() itself must choose the loop
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val minSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val rnd = new scala.util.Random(7)
+    val edges = (1 to 400).map(_ => (s"n${rnd.nextInt(300)}", s"n${rnd.nextInt(300)}"))
+      .filter { case (a, b) => a != b }
+    val df = edges.toDF("src", "dst")
+    def run() = JobCounter(spark)(ConnectedComponents.components(df)
+      .as[(String, String)].collect().toMap)
+    val (fast, fastJobs) = run()
+    val prev = Seq(advisory, minSize).map(k => k -> spark.conf.getOption(k))
+    val (loop, loopJobs) =
+      try {
+        spark.conf.set(advisory, "1k")
+        spark.conf.set(minSize, "1k")
+        run()
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    val expected = ConnectedComponents.unionFindComponents(edges.iterator).toMap
+    assert(fast == expected && loop == expected)
+    // on top of the fast path's jobs, the loop checkpoints the re-partitioned
+    // edge set and runs one job per round, at least two rounds
+    assert(loopJobs >= fastJobs + 3, s"loop regime not taken: $loopJobs vs $fastJobs jobs")
+  }
+
   test("union-find skips null-endpoint edges, as components() drops them") {
     val edges = Seq(("a", "b"), (null, "c"), ("d", null), (null, null), ("b", "e"))
     val direct = ConnectedComponents.unionFindComponents(edges.iterator).toMap

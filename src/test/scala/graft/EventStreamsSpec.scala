@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventStreams
@@ -46,6 +46,32 @@ class EventStreamsSpec extends AnyFunSuite {
     // the [0,60) window of our epoch-aligned hour contains exactly the 2
     // on-time clicks; the late straggler (value 100) was dropped
     assert(firstWin.exists(r => r._2 == "click" && r._3 == 2), s"got ${rows.mkString(",")}")
+  }
+
+  test("a window ending at the final watermark is emitted (append, AvailableNow)") {
+    // max(ts) = 01:10 with a 10-minute delay puts the final watermark at
+    // 01:00, exactly the end of window [00:00, 01:00): Spark evicts a
+    // window when end <= watermark, which the events_stream_tumbling
+    // oracle mirrors with `<=`. Window [01:00, 02:00) stays open.
+    val dir = java.nio.file.Files.createTempDirectory("graft_wm")
+    val src = dir.resolve("src").toString
+    def at(hhmm: String) = Timestamp.from(java.time.Instant.parse(s"2026-01-01T$hhmm:00Z"))
+    Seq((at("00:00"), "a", 1.0), (at("00:30"), "a", 1.0), (at("01:10"), "a", 1.0))
+      .toDF("ts", "event_type", "value")
+      .coalesce(1).write.parquet(src)
+    val schema = spark.read.parquet(src).schema
+    val out = dir.resolve("out").toString
+    EventStreams.windowedCounts(spark.readStream.schema(schema).parquet(src),
+        watermark = "10 minutes", windowLen = "1 hour")
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", dir.resolve("ckpt").toString)
+      .outputMode(OutputMode.Append())
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+
+    val emitted = spark.read.parquet(out).select($"win_start", $"n").collect()
+      .map(r => (r.getTimestamp(0).toInstant.toString, r.getLong(1))).toSeq
+    assert(emitted == Seq(("2026-01-01T00:00:00Z", 2L)), s"got $emitted")
   }
 
   test("flatMapGroupsWithState sessionization closes on gap") {

@@ -140,6 +140,16 @@ class PipelineSpec extends AnyFunSuite {
     assert(sec >= 1.5, s"manifest sec $sec misses the compute block")
   }
 
+  test("snapshot store: a run config without today fails naming its path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_runcfg")
+    java.nio.file.Files.write(dir.resolve("_RUN_CONFIG.json"),
+      """{"date": "2025-01-01"}""".getBytes("UTF-8"))
+    val store = new SnapshotStore(spark, dir.toString)
+    val e = intercept[RuntimeException](store.pinRunDate(java.time.LocalDate.of(2025, 1, 1)))
+    assert(e.getMessage.contains("_RUN_CONFIG.json") && e.getMessage.contains("today"),
+      e.getMessage)
+  }
+
   test("full pipeline over synthetic docs: stages commit, output sane, resume identical") {
     val dir = java.nio.file.Files.createTempDirectory("graft_pipe").toString
     val docs = SynthDocs.fromDocuments(spark, "/root/testdata/sf0.001")
